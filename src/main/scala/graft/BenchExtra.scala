@@ -1,37 +1,44 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Round-7 instrumentation harness (guide §1: measure first) — NOT the
-  * driver's bench. [[Bench]] stays the frozen measurement contract; this
-  * main exists to DECOMPOSE per-query wall time into scheduler-visible
-  * parts (jobs, stages, tasks, executor task-time sum, GC sum, shuffle
-  * bytes) so optimization targets the real cost, and to dump
-  * `.explain("formatted")` plans for the judge-facing `plans/r07/` audit.
+/** The dev probe — NOT a bench. [[Bench]] stays the frozen measurement
+  * contract; this main DECOMPOSES per-query wall time into
+  * scheduler-visible parts (jobs, stages, tasks, executor task-time sum, GC
+  * sum, shuffle bytes) so optimization targets the real cost. Session
+  * config matches [[Bench]] exactly so the decomposition explains its
+  * numbers. Layer timings of the KG build and dedup live in the
+  * benchmark's traced run (`perfbench/run.py --trace 1`), not here.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.BenchExtra [--plans outDir] [query ...]"
+  *     sbt "runMain graft.BenchExtra [--stages] [--plans dir] [--reps N] [query ...]"
   *
-  * With no query args, every registered query runs. Session config matches
-  * [[Bench]] exactly so the decomposition explains the driver's numbers.
+  *   --stages    also print the 12 costliest stages of each run
+  *   --plans d   write each query's `explain("formatted")` plan to d/<query>.txt
+  *               (the plan audit behind PLANS.md)
+  *   --reps N    run each query N times (a steady loop for a JFR recording
+  *               passed in through SPARK_GC_OPTS)
+  *
+  * With no query args, every registered query runs. A query that throws
+  * prints `FAILED <name>: <message>` and the rest still run; the process
+  * then exits non-zero.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // order-independent flag parse: --plans <dir> and --stages may appear
-    // in either order, anywhere before the query names
+    // order-independent flag parse: flags may appear in any order, anywhere
+    // before the query names
     var plansDir: Option[String] = None
     var stageDetail = false
+    var reps = 1
     var names0 = List.empty[String]
     var rest = args.toList
     while (rest.nonEmpty) rest match {
       case "--plans" :: dir :: tail => plansDir = Some(dir); rest = tail
       case "--stages" :: tail => stageDetail = true; rest = tail
+      case "--reps" :: n :: tail => reps = n.toInt; rest = tail
       case q :: tail => names0 = names0 :+ q; rest = tail
       case Nil => ()
     }
@@ -44,81 +51,53 @@ object BenchExtra {
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     SparkEntry.prestage(spark, sfDir)
-
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val tasks = new AtomicInteger
-    val taskTimeMs = new AtomicLong
-    val gcTimeMs = new AtomicLong
-    val shufReadB = new AtomicLong
-    val shufWriteB = new AtomicLong
-    // per-stage rollup for --stages: (name, numTasks, taskSumMs)
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        val i = s.stageInfo
-        val run = Option(i.taskMetrics).map(_.executorRunTime).getOrElse(0L)
-        // the short name is usually the AQE pool callsite; the long-form
-        // details carry the user stack — surface the first graft frame
-        val site = i.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("BenchExtra"))
-          .getOrElse(i.name).trim
-        stageRows.add((site, i.numTasks, run))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTimeMs.addAndGet(m.executorRunTime)
-          gcTimeMs.addAndGet(m.jvmGCTime)
-          shufReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val ledger = StageLedger.attach(spark.sparkContext)
 
     val names =
       if (names0.nonEmpty) names0
       else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
-      plansDir.foreach { dir =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(dir, s"$name.txt"), plan)
-      }
-      spark.catalog.clearCache()
-      jobs.set(0); stages.set(0); tasks.set(0)
-      taskTimeMs.set(0); gcTimeMs.set(0); shufReadB.set(0); shufWriteB.set(0)
-      stageRows.clear()
-      spark.sparkContext.setJobDescription(name)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.setJobDescription(null)
-      // listener events drain asynchronously; give the bus a moment so the
-      // counters cover this query's tail
-      Thread.sleep(300)
-      println(f"[extra] $name%-36s wall=$wall%7.2f s rows=$n%7d " +
-        f"jobs=${jobs.get}%3d stages=${stages.get}%4d tasks=${tasks.get}%5d " +
-        f"taskSum=${taskTimeMs.get / 1000.0}%8.2f s gc=${gcTimeMs.get / 1000.0}%6.2f s " +
-        f"shufR=${shufReadB.get / 1e6}%8.1f MB shufW=${shufWriteB.get / 1e6}%8.1f MB")
-      if (stageDetail) {
-        import scala.jdk.CollectionConverters._
-        stageRows.asScala.toSeq.sortBy(-_._3).take(12).foreach {
-          case (nm, nt, run) =>
-            println(f"[stage]   ${run / 1000.0}%7.2f s  $nt%4d tasks  " +
-              nm.linesIterator.next().take(110))
-        }
+    val failed = names.filterNot { name =>
+      try { probe(spark, sfDir, ledger, name, plansDir, stageDetail, reps); true }
+      catch { case e: Throwable =>
+        println(s"FAILED $name: ${e.getMessage}")
+        false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  private def probe(spark: SparkSession, sfDir: String, ledger: StageLedger,
+      name: String, plansDir: Option[String], stageDetail: Boolean, reps: Int): Unit = {
+    val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
+    plansDir.foreach { dir =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dir, s"$name.txt"), plan)
+    }
+    (1 to reps).foreach { _ =>
+      spark.catalog.clearCache()
+      val ((n, wall), s) = ledger.span(name) {
+        val t0 = System.nanoTime()
+        val n = fn(spark, sfDir).count()
+        (n, (System.nanoTime() - t0) / 1e9)
+      }
+      println(f"[extra] $name%-36s wall=$wall%7.2f s rows=$n%7d " +
+        f"jobs=${s.jobs}%3d stages=${s.stages.size}%4d tasks=${s.tasks}%5d " +
+        f"taskSum=${s.taskRunMs / 1000.0}%8.2f s gc=${s.gcMs / 1000.0}%6.2f s " +
+        f"shufR=${s.shuffleReadBytes / 1e6}%8.1f MB shufW=${s.shuffleWriteBytes / 1e6}%8.1f MB")
+      if (stageDetail)
+        s.stages.sortBy(-_.taskMetrics.executorRunTime).take(12).foreach { i =>
+          // the short name is usually the AQE pool callsite; the long-form
+          // details carry the user stack — surface the first graft frame
+          val site = i.details.linesIterator
+            .find(l => l.contains("graft.") && !l.contains("BenchExtra") && !l.contains("StageLedger"))
+            .getOrElse(i.name).trim
+          println(f"[stage]   ${i.taskMetrics.executorRunTime / 1000.0}%7.2f s  ${i.numTasks}%4d tasks  " +
+            site.take(110))
+        }
+    }
   }
 }

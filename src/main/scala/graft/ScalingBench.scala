@@ -163,26 +163,29 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_STAGELOG=1: per-stage wall + task-time sums on stderr —
-    // the decomposition tool behind the efficiency analyses in BENCH.md
-    // (which stages lose N->4N efficiency: ragged waves show wall >>
+    // SPARK_GRAFT_STAGELOG=1: per-stage wall + task-time sums of each run on
+    // stderr — the decomposition tool behind the efficiency analyses in
+    // BENCH.md (which stages lose N->4N efficiency: ragged waves show wall >>
     // taskSum/cpus; memory-subsystem inflation shows taskSum itself growing
     // with cpus; pure scheduler idle shows neither)
-    if (sys.env.get("SPARK_GRAFT_STAGELOG").contains("1"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = (for {t1 <- si.completionTime; t0 <- si.submissionTime}
-            yield (t1 - t0) / 1000.0).getOrElse(-1.0)
-          System.err.println(f"[stage] id=${si.stageId} tasks=${si.numTasks} " +
-            f"wall=$wall%.1f taskSum=${si.taskMetrics.executorRunTime / 1000.0}%.1f " +
-            f"gcSum=${si.taskMetrics.jvmGCTime / 1000.0}%.1f " +
-            f"cpuSum=${si.taskMetrics.executorCpuTime / 1e9}%.1f " +
-            f"spillMB=${si.taskMetrics.memoryBytesSpilled / 1048576} " +
-            f"name=${si.name.takeWhile(_ != '(').take(50)}")
-        }
-      })
+    val stageLog =
+      if (sys.env.get("SPARK_GRAFT_STAGELOG").contains("1"))
+        Some(StageLedger.attach(spark.sparkContext))
+      else None
+    def logged[T](body: => T): T = stageLog.fold(body) { ledger =>
+      val (r, run) = ledger.span("scaling-run")(body)
+      run.stages.foreach { si =>
+        val wall = (for {t1 <- si.completionTime; t0 <- si.submissionTime}
+          yield (t1 - t0) / 1000.0).getOrElse(-1.0)
+        System.err.println(f"[stage] id=${si.stageId} tasks=${si.numTasks} " +
+          f"wall=$wall%.1f taskSum=${si.taskMetrics.executorRunTime / 1000.0}%.1f " +
+          f"gcSum=${si.taskMetrics.jvmGCTime / 1000.0}%.1f " +
+          f"cpuSum=${si.taskMetrics.executorCpuTime / 1e9}%.1f " +
+          f"spillMB=${si.taskMetrics.memoryBytesSpilled / 1048576} " +
+          f"name=${si.name.takeWhile(_ != '(').take(50)}")
+      }
+      r
+    }
 
     if (phase == "graph") {
       // graph-scaling phase: 3-iteration integer PageRank over the scaled
@@ -269,8 +272,8 @@ object ScalingBench {
         spark.catalog.clearCache()
         (row.getLong(0), row.getLong(1), wall, derive, iterate)
       }
-      oneRun(mentionsDirFor(math.min(repl, 10)), "warm") // small warm-up, discarded
-      val runs = (1 to nRuns).map(_ => oneRun(mentionsDir, "timed"))
+      logged(oneRun(mentionsDirFor(math.min(repl, 10)), "warm")) // small warm-up, discarded
+      val runs = (1 to nRuns).map(_ => logged(oneRun(mentionsDir, "timed")))
       def med(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
       val walls = runs.map(_._3).sorted
       val median = walls(walls.length / 2)
@@ -331,8 +334,8 @@ object ScalingBench {
       // codegen + classloading warm without paying a full-size discarded run
       // — at multi-million-doc timed inputs that run would dominate the
       // invocation's wall clock without adding evidence
-      oneRun(corpusDirFor(math.min(repl, 40)))
-      val runs = (1 to nRuns).map(_ => oneRun(corpusDir))
+      logged(oneRun(corpusDirFor(math.min(repl, 40))))
+      val runs = (1 to nRuns).map(_ => logged(oneRun(corpusDir)))
       val walls = runs.map(_._3).sorted
       val median = walls(walls.length / 2)
       println(
@@ -409,8 +412,8 @@ object ScalingBench {
       (nTriples, wall)
     }
 
-    oneRun() // warm-up, discarded
-    val runs = (1 to nRuns).map(_ => oneRun())
+    logged(oneRun()) // warm-up, discarded
+    val runs = (1 to nRuns).map(_ => logged(oneRun()))
     val nTriples = runs.head._1
     val walls = runs.map(_._2).sorted
     val median = walls(walls.length / 2)

@@ -222,7 +222,7 @@ object Pipeline {
     val spans = Extractors.textSpans(postings)
     val cands = graft.kg.graph.GraphOps.pin(Extractors
       .candidates(spans, prep.mentionTwoGramKinds, gaz.mentionDims.map(_._1)))
-    // pin (eager DISK_ONLY localCheckpoint), not persist: an
+    // pin, not persist: an
     // InMemoryRelation keeps its full child plan under every one of the
     // four consuming branches, so each downstream stage's task closure
     // carried the whole scan+explode subtree — measured ~25% of worker CPU

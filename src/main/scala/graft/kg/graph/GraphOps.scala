@@ -160,13 +160,11 @@ object GraphOps {
     * iteration / three times in the triangle join). Without pinning, every
     * consumer re-derives edges from the corpus-sized triple relation —
     * measured on the unpinned plan: 1080 physical nodes, the triple
-    * pipeline replicated ~8× inside one action. An eager DISK_ONLY
-    * localCheckpoint (the [[graft.ops.Dedup]] materializedOnce pattern —
-    * auto-released blocks, no caller cache contract) cuts the re-derivation:
-    * the checkpoint is GRAPH-sized (distinct entity pairs), far below the
-    * corpus-sized input it would otherwise recompute, so unlike the
-    * size-aware shingle checkpoint this one is the right trade at every
-    * scale.
+    * pipeline replicated ~8× inside one action. A [[pin]] cuts the
+    * re-derivation: the checkpoint is GRAPH-sized (distinct entity pairs),
+    * far below the corpus-sized input it would otherwise recompute, so
+    * unlike the size-aware shingle checkpoint this one is the right trade at
+    * every scale.
     *
     * SCOPE: this is the EXPLORATION-scale entry (one-shot sessions, no
     * standing tables). Every ITERATED consumer — pagerank/LPA/BFS/walk
@@ -180,10 +178,21 @@ object GraphOps {
     */
   def pinnedEdges(triples: DataFrame): DataFrame = pin(coocEdges(triples))
 
-  /** The materializedOnce primitive the graph family shares: eager
-    * DISK_ONLY localCheckpoint (auto-released blocks, no caller cache
-    * contract). Use it on any GRAPH-sized relation consumed more than
-    * once inside one plan — iterated joins, self-joins, peel rounds.
+  /** The library's one pin: an eager DISK_ONLY localCheckpoint of a
+    * relation consumed more than once — across actions, where exchange
+    * reuse cannot reach, or inside one plan (iterated joins, self-joins,
+    * peel rounds). The blocks are released by the ContextCleaner once the
+    * relation is unreachable, so callers carry no cache contract. DISK_ONLY:
+    * a pinned relation can exceed the storage-memory pool (a 1M-doc dedup
+    * holds ~47M shingle rows), and a MEMORY_AND_DISK pin would compete with
+    * join/agg execution memory; executor-local disk behaves like one extra
+    * shuffle write and the OS page cache serves the re-reads.
+    *
+    * CLUSTER CAVEAT: a local checkpoint truncates lineage, so a pinned block
+    * lost with its executor cannot be recomputed and every downstream
+    * action over it fails. On a cluster where executors can be lost, swap
+    * this body for a reliable `checkpoint` (with a checkpoint directory on
+    * shared storage).
     */
   private[graft] def pin(df: DataFrame): DataFrame =
     df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)

@@ -97,7 +97,7 @@ object Ontology {
     * broadcast), each triple left-joins it and explodes [obj] ∪ ancestors,
     * then one distinct (the R12 fused-dedup discipline). The naive
     * `t.union(t ⋈ closure)` formulation re-executes the whole upstream
-    * triple derivation once per union branch (caught by PlanAudit: two
+    * triple derivation once per union branch (caught by the plan audit: two
     * full extraction subtrees in the union) — the join+explode keeps a
     * single derivation without requiring the caller to checkpoint.
     */

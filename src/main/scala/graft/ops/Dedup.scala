@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.kg.expr.SignBands.signBands
 import graft.kg.expr.SignBandsAlgo
 import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
+import graft.kg.graph.GraphOps
 
 /** Deduplication operators for a large-scale training-data pipeline: exact
   * (hash key), n-gram Jaccard (DF-capped shingle self-join + exact verify),
@@ -50,12 +51,11 @@ import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
   *
   * Caching: no `persist`, no caller contract. The multiply-consumed
   * shingle/signature relations are materialized exactly once via
-  * [[materializedOnce]] (localCheckpoint — evictable block storage,
-  * auto-released by the ContextCleaner; see its scaladoc for why
-  * ReuseExchange alone was measured insufficient, and for the size-aware
-  * skip below which the checkpoint is pure overhead). CacheHygieneSpec asserts
-  * the cache manager stays empty after every dedup action, so library
-  * callers cannot leak cached plans.
+  * [[materializedOnce]] (a [[graft.kg.graph.GraphOps.pin]]; see its
+  * scaladoc for why ReuseExchange alone was measured insufficient, and for
+  * the size-aware skip below which the checkpoint is pure overhead).
+  * CacheHygieneSpec asserts the cache manager stays empty after every dedup
+  * action, so library callers cannot leak cached plans.
   */
 object Dedup {
 
@@ -147,8 +147,8 @@ object Dedup {
     (reps.select(col("rep_id"), col("text")), members)
   }
 
-  /** Materialize a multiply-consumed expensive relation exactly once, as
-    * block-manager storage (`localCheckpoint`). Why not rely on AQE
+  /** Materialize a multiply-consumed expensive relation exactly once, with
+    * [[graft.kg.graph.GraphOps.pin]]. Why not rely on AQE
     * ReuseExchange: (a) it cannot cross ACTIONS, and the dedup decision is
     * inherently multi-action (the iterative CC materialization and the final
     * survivor join are separate jobs over the same shingle relation); (b)
@@ -157,19 +157,12 @@ object Dedup {
     * 0.41 GB exchange was written THREE times (verify side a, verify side b,
     * signatures), 53% of the operator's total task time. Why not `persist`:
     * that was round 2's design and it required a caller-side
-    * clearCache contract (round-2 verdict, "What's missing" #5);
-    * localCheckpoint blocks are evictable (MEMORY_AND_DISK) and are released
-    * automatically by the ContextCleaner when the relation becomes
-    * unreachable — no contract, CacheHygieneSpec-clean. At cluster scale
-    * this is one extra write of the relation to executor-local storage —
-    * strictly cheaper than recomputing a corpus-wide derivation 2–4×.
-    * localCheckpoint preserves the physical partitioning in the LogicalRDD,
-    * so downstream per-doc aggs/joins keep the clustering they relied on.
-    * DISK_ONLY storage: the relation can exceed the storage-memory pool at
-    * any scale (a 1M-doc run holds ~47M shingle rows), and an evicting
-    * MEMORY_AND_DISK checkpoint would compete with join/agg execution
-    * memory; executor-local disk behaves like one extra shuffle write and
-    * the OS page cache serves the re-reads.
+    * clearCache contract (round-2 verdict, "What's missing" #5); pinned
+    * blocks need none (CacheHygieneSpec-clean). At cluster scale this is
+    * one extra write of the relation to executor-local storage — strictly
+    * cheaper than recomputing a corpus-wide derivation 2–4×. The pin
+    * preserves the physical partitioning in the LogicalRDD, so downstream
+    * per-doc aggs/joins keep the clustering they relied on.
     *
     * SIZE-AWARE: below [[CheckpointMinBytesKey]] (Catalyst's estimate of the
     * source corpus relation, default 16 MB) the checkpoint is SKIPPED — for a
@@ -190,9 +183,7 @@ object Dedup {
   }
 
   private def materializedOnce(df: DataFrame, checkpoint: Boolean): DataFrame =
-    if (checkpoint)
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    else df
+    if (checkpoint) GraphOps.pin(df) else df
 
   /** Distinct n-gram token shingles: (doc_id, s). Docs shorter than n tokens
     * emit none — the size guard matters because `sequence(1, size-n+1)`

@@ -410,8 +410,7 @@ object TextOps {
     val corpus = Dedup.derivedCorpus(docs)
     val stats = quality(corpus).select("doc_id", "n_tokens", "quality_e4")
     val lang = predLang(corpus).select("doc_id", "pred_lang")
-    // the gate output is PINNED (eager DISK_ONLY localCheckpoint — the
-    // GraphOps.pin primitive): dupClusters consumes `kept` through several
+    // the gate output is PINNED: dupClusters consumes `kept` through several
     // relations across TWO actions (collapse/shingles/signatures during the
     // CC materialization, survivor sizes in the final action), and each
     // un-pinned consumer re-ran the whole gate — quality scan, predLang
