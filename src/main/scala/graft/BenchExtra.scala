@@ -16,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   --stages    also print the 12 costliest stages of each run
   *   --plans d   write each query's `explain("formatted")` plan to d/<query>.txt
-  *               (the plan audit behind PLANS.md)
+  *               with run-varying ids normalized (the plan audit behind
+  *               PLANS.md; `--reps 0` dumps without running)
   *   --reps N    run each query N times (a steady loop for a JFR recording
   *               passed in through SPARK_GC_OPTS)
   *
@@ -67,6 +68,23 @@ object BenchExtra {
     if (failed.nonEmpty) sys.exit(1)
   }
 
+  /** A plan string with the tokens that differ between two builds of one
+    * plan made stable: expression ids (`#123`), exchange plan ids, generated
+    * lambda-variable names (`x_12`), RDD and broadcast ids
+    * (`MapPartitionsRDD[45]`, `Broadcast(7)`), identity hashes of array
+    * literals (`[D@1b2c3d`) and the random suffix of `graft-*` temp dirs —
+    * so two runs of one tree dump byte-identical files and a diff between
+    * trees shows only plan changes.
+    */
+  private[graft] def normalizedPlan(plan: String): String =
+    plan.replaceAll("#\\d+", "#N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("\\b([xy])_\\d+\\b", "$1_N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("Broadcast\\(\\d+\\)", "Broadcast(N)")
+      .replaceAll("\\[([A-Z])@[0-9a-f]+", "[$1@N")
+      .replaceAll("(graft-[a-z-]+?)\\d+", "$1N")
+
   private def probe(spark: SparkSession, sfDir: String, ledger: StageLedger,
       name: String, plansDir: Option[String], stageDetail: Boolean, reps: Int): Unit = {
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
@@ -75,7 +93,7 @@ object BenchExtra {
       val plan = fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, s"$name.txt"), plan)
+        java.nio.file.Paths.get(dir, s"$name.txt"), normalizedPlan(plan))
     }
     (1 to reps).foreach { _ =>
       spark.catalog.clearCache()

@@ -7,6 +7,8 @@ import graft.kg.Pipeline
 import graft.kg.expr.AhoCorasickMatches
 import graft.kg.extract.{Extractors, Media}
 import graft.kg.io.{Dictionaries, GazetteerIO, SyntheticCorpus}
+import graft.kg.query.{Ontology, TripleStore}
+import graft.kg.query.TripleStore.TriplePattern
 import graft.kg.schema.Schemas.Pred
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -27,6 +29,19 @@ object SparkEntry {
   private def spans(s: SparkSession, dir: String): DataFrame =
     Extractors.textSpans(SyntheticCorpus.materializedPostings(s, dir))
 
+  /** The deduplicated (subj, pred, obj) KG of the derived postings. */
+  private def triples(s: SparkSession, dir: String): DataFrame =
+    Pipeline.allTriples(SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
+      .select(col("subj"), col("pred"), col("obj"))
+
+  /** The committed (pred, bucket)-partitioned triple store, built once per
+    * `dir` by [[TripleStore.materializedTripleTable]].
+    */
+  private def committedTriples(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(TripleStore.materializedTripleTable(
+      s, Pipeline.allTriplesRaw(
+        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s)), tag = dir))
+
   /** The committed (pred, bucket)-partitioned store unioned with the
     * metadata-sized is_a taxonomy — the input chain3, kg_describe,
     * kg_construct and kg_ask consume (the read path and the is_a
@@ -34,14 +49,9 @@ object SparkEntry {
     */
   private def committedTriplesWithOntology(s: SparkSession,
       dir: String): DataFrame = {
-    import graft.kg.query.{Ontology, TripleStore}
-    val root = TripleStore.materializedTripleTable(
-      s, Pipeline.allTriplesRaw(
-        SyntheticCorpus.materializedPostings(s, dir),
-        Pipeline.defaultGazetteers(s)), tag = dir)
     val ont = Ontology.taxonomyDf(s).select(col("child").as("subj"),
       lit("is_a").as("pred"), col("parent").as("obj"))
-    s.read.parquet(root).select(col("subj"), col("pred"), col("obj"))
+    committedTriples(s, dir).select(col("subj"), col("pred"), col("obj"))
       .union(ont)
   }
   /** The 3-hop chain over committed store (hop 1, partition-pruned) +
@@ -73,18 +83,14 @@ object SparkEntry {
     */
   private def entityEdges(s: SparkSession, dir: String): DataFrame =
     s.table(graft.kg.graph.GraphOps.materializedEdgeTable(
-      s, Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")), tag = dir))
+      s, triples(s, dir), tag = dir))
 
   /** The WEIGHTED bucketed edge table — same production entry for the
     * weighted iterated consumers (weighted rank, shortest paths).
     */
   private def entityWeightedEdges(s: SparkSession, dir: String): DataFrame =
     s.table(graft.kg.graph.GraphOps.materializedWeightedEdgeTable(
-      s, Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")), tag = dir))
+      s, triples(s, dir), tag = dir))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -99,14 +105,10 @@ object SparkEntry {
     * made rows incomparable across rounds.
     */
   def prestage(spark: SparkSession, dir: String): Unit = {
-    val postings = SyntheticCorpus.materializedPostings(spark, dir)
-    val gaz = Pipeline.defaultGazetteers(spark)
-    graft.kg.query.TripleStore.materializedTripleTable(
-      spark, Pipeline.allTriplesRaw(postings, gaz), tag = dir)
-    val triples = Pipeline.allTriples(postings, gaz)
-      .select(col("subj"), col("pred"), col("obj"))
-    graft.kg.graph.GraphOps.materializedEdgeTable(spark, triples, tag = dir)
-    graft.kg.graph.GraphOps.materializedWeightedEdgeTable(spark, triples, tag = dir)
+    committedTriples(spark, dir)
+    val t = triples(spark, dir)
+    graft.kg.graph.GraphOps.materializedEdgeTable(spark, t, tag = dir)
+    graft.kg.graph.GraphOps.materializedWeightedEdgeTable(spark, t, tag = dir)
     GazetteerIO.materializedSkillsTsv()
     OpsEntries.prestage(spark, dir)
   }
@@ -203,9 +205,7 @@ object SparkEntry {
         .select(col("doc_id").as("subj"), col("pred"), col("obj"))),
     // -- R12 full union, dedup ----------------------------------------------
     "kg_all_triples" -> ((s, dir) =>
-      Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))),
+      triples(s, dir)),
     // -- full-fidelity triples incl. score + evidence offset (rows-only) -----
     "kg_triples_full" -> ((s, dir) =>
       Pipeline.allTriples(
@@ -221,17 +221,11 @@ object SparkEntry {
       Pipeline.canonicalSurfacesIncremental(spans(s, dir), Dictionaries.titlesDf(s))),
     // -- graph analytics over the emitted KG: entity co-occurrence graph -----
     "kg_entity_pagerank" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.pagerank(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.pagerank(triples(s, dir))),
     "kg_entity_triangles" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.triangles(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.triangles(triples(s, dir))),
     "kg_entity_components" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.components(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.components(triples(s, dir))),
     // the PRODUCTION physical path for the same logical pagerank: edges
     // materialized once as a bucketed-by-x sorted table, iterations join
     // against the scan layout (no per-iteration edge exchange). Result-equal
@@ -239,9 +233,7 @@ object SparkEntry {
     // (the kg_skills / kg_skills_trie two-plans-one-oracle pattern).
     "kg_entity_pagerank_bucketed" -> ((s, dir) => {
       val tbl = graft.kg.graph.GraphOps.materializedEdgeTable(
-        s, Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")), tag = dir)
+        s, triples(s, dir), tag = dir)
       graft.kg.graph.GraphOps.pagerankOnEdges(s.table(tbl))
     }),
     // -- KG consumption: subject-star BGP over the COMMITTED (pred, bucket)-
@@ -251,12 +243,7 @@ object SparkEntry {
     // PartitionFilters); constraints are broadcast semi joins, bindings
     // chain on subj.
     "kg_star_query" -> ((s, dir) => {
-      import graft.kg.query.TripleStore, TripleStore.TriplePattern
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.starQuery(s.read.parquet(root), Seq(
+      TripleStore.starQuery(committedTriples(s, dir), Seq(
         TriplePattern("requiresSkill", obj = Some("S001")),
         TriplePattern("requiresLanguage", obj = Some("LANG00")),
         TriplePattern("hasTitle", bind = Some("title")),
@@ -265,42 +252,20 @@ object SparkEntry {
     // -- SPARQL OPTIONAL: title required, location OPTIONAL (odd doc_ids
     // have no locatedIn triple — their rows keep a NULL loc)
     "kg_star_optional" -> ((s, dir) => {
-      import graft.kg.query.TripleStore, TripleStore.TriplePattern
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.starQuery(s.read.parquet(root), Seq(
+      TripleStore.starQuery(committedTriples(s, dir), Seq(
         TriplePattern("requiresSkill", obj = Some("S001")),
         TriplePattern("hasTitle", bind = Some("title")),
         TriplePattern("locatedIn", bind = Some("loc"), optional = true)))
     }),
     // -- catalog stats: the selectivity numbers the BGP planner orders by
-    "kg_predicate_stats" -> ((s, dir) => {
-      import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.predicateStats(s.read.parquet(root))
-    }),
+    "kg_predicate_stats" -> ((s, dir) =>
+      TripleStore.predicateStats(committedTriples(s, dir))),
     // -- KMV sketch: the 10^12-row path for the same catalog stats --
-    "kg_predicate_card_sketch" -> ((s, dir) => {
-      import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.predicateCardSketch(s.read.parquet(root))
-    }),
+    "kg_predicate_card_sketch" -> ((s, dir) =>
+      TripleStore.predicateCardSketch(committedTriples(s, dir))),
     // -- incremental sketch: shard sketches fold into stored state --
     "kg_card_sketch_increment" -> ((s, dir) => {
-      import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      val t = s.read.parquet(root)
+      val t = committedTriples(s, dir)
       // deterministic doc split: base "corpus" vs daily "shard"
       val side = pmod(
         conv(substring(md5(col("subj")), 1, 15), 16, 10).cast("long"), lit(2L))
@@ -310,30 +275,19 @@ object SparkEntry {
     }),
     // -- edge support/embeddedness: bridge-vs-clique edge classification --
     "kg_edge_support" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.edgeSupport(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.edgeSupport(triples(s, dir))),
     // -- k-truss: edge-level community cores (k=3, convergence-checked) --
     "kg_entity_ktruss" -> ((s, dir) =>
       graft.kg.graph.GraphOps.ktrussOnEdges(entityEdges(s, dir))),
     // -- clustering coefficient: neighborhood interlinkedness per entity --
     "kg_clustering_coeff" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.clusteringCoefficient(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.clusteringCoefficient(triples(s, dir))),
     // -- degree histogram: the hub-skew diagnostic for the entity graph --
     "kg_degree_hist" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.degreeHistogram(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.degreeHistogram(triples(s, dir))),
     // -- sibling BGP: postings in the same city as S001-requiring postings
     "kg_sibling_query" -> ((s, dir) => {
-      import graft.kg.query.TripleStore, TripleStore.TriplePattern
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.siblingQuery(s.read.parquet(root), via = "locatedIn",
+      TripleStore.siblingQuery(committedTriples(s, dir), via = "locatedIn",
         constraints = Seq(TriplePattern("requiresSkill", obj = Some("S001"))))
     }),
     // -- k-core: robustly-connected entities (k=2, convergence-checked) --
@@ -349,9 +303,7 @@ object SparkEntry {
       graft.kg.graph.GraphOps.harmonicCentralityOnEdges(entityEdges(s, dir))),
     // -- lift-scored edges: association strength for graph pruning --
     "kg_edge_lift" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.edgeLift(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.edgeLift(triples(s, dir))),
     // -- weighted shortest paths: converged min-cost from the seed set --
     "kg_entity_wsp" -> ((s, dir) =>
       graft.kg.graph.GraphOps.shortestPathsOnWeightedEdges(
@@ -368,17 +320,13 @@ object SparkEntry {
       graft.kg.graph.GraphOps.pagerankWeightedOnEdges(
         entityWeightedEdges(s, dir))),
     "kg_entity_pagerank_weighted_pinned" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.pagerankWeighted(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.pagerankWeighted(triples(s, dir))),
     // incremental co-occurrence maintenance: base = docs with id%5 != 4
     // plays the committed half-edge state; the id%5 == 4 shard folds in via
     // shard-local pair derivation + ONE anti-join (base never rescanned at
     // the mention level — co-occurrence is per-doc)
     "kg_cooc_increment" -> ((s, dir) => {
-      val t = Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))
+      val t = triples(s, dir)
       graft.kg.graph.GraphOps.incrementalCoocEdges(
         graft.kg.graph.GraphOps.halfCoocEdges(
           t.where(pmod(col("subj").cast("long"), lit(5)) =!= 4)),
@@ -395,21 +343,15 @@ object SparkEntry {
         lit(Pred.requiresSkill).as("pred"), col("entity_id").as("obj")).distinct()
     }),
     // -- ontology: transitive closure of the is_a taxonomy (metadata-sized) --
-    "kg_taxonomy_closure" -> ((s, dir) => {
-      import graft.kg.query.Ontology
-      Ontology.transitiveClosure(Ontology.taxonomyDf(s))
-    }),
+    "kg_taxonomy_closure" -> ((s, dir) =>
+      Ontology.transitiveClosure(Ontology.taxonomyDf(s))),
     // -- RDFS-style entailment: triples + taxonomy-ancestor objects ----------
     // ("requiresSkill S007" entails "requiresSkill SCAT1"/"requiresSkill
     // Skill"); broadcast closure, ONE corpus-scale pass
-    "kg_entailed_triples" -> ((s, dir) => {
-      import graft.kg.query.Ontology
+    "kg_entailed_triples" -> ((s, dir) =>
       Ontology.entailTriples(
-        Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")),
-        Ontology.transitiveClosure(Ontology.taxonomyDf(s)))
-    }),
+        triples(s, dir),
+        Ontology.transitiveClosure(Ontology.taxonomyDf(s)))),
     // -- label propagation: density-respecting communities (vs CC's ---------
     // reachability); deterministic min-label tie-break, 3 sync rounds
     // -- fixed-3-round LPA: the rounds ARE the contract (the BFS radius
@@ -423,9 +365,7 @@ object SparkEntry {
     // -- KG-embedding training data: filtered negative samples (TransE-style)
     "kg_negative_samples" -> ((s, dir) =>
       graft.kg.train.EmbeddingData.negativeSamples(
-        Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")),
+        triples(s, dir),
         pred = "requiresSkill",
         vocab = graft.kg.io.Dictionaries.gazSkills.map(_.entity_id).distinct.sorted)),
     // -- head-corruption half of the Bordes protocol: the subject domain is
@@ -434,9 +374,7 @@ object SparkEntry {
     "kg_negative_samples_subj" -> ((s, dir) => {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       graft.kg.train.EmbeddingData.negativeSamplesSubject(
-        Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")),
+        triples(s, dir),
         pred = "requiresSkill",
         subjVocab = s.range(n).select(col("id").as("vi"),
           col("id").cast("string").as("v")),
@@ -453,25 +391,14 @@ object SparkEntry {
           walksPerNode = 2))),
     // -- feature-store export: one wide row per subject off the committed
     // store (single hash-agg of conditional aggregates, no per-column join)
-    "kg_property_table" -> ((s, dir) => {
-      import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.propertyTable(s.read.parquet(root))
-    }),
+    "kg_property_table" -> ((s, dir) =>
+      TripleStore.propertyTable(committedTriples(s, dir))),
     // incremental maintenance of the same view: base = docs with id%5 != 4
     // plays the committed state (wide table + store); the id%5 == 4 shard
     // folds in via touched-subject re-agg + anti-join pass-through.
     // Shares kg_property_table's from-scratch oracle — the merge identity.
     "kg_property_increment" -> ((s, dir) => {
-      import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      val t = s.read.parquet(root).select(col("subj"), col("pred"), col("obj"))
+      val t = committedTriples(s, dir).select(col("subj"), col("pred"), col("obj"))
       val isShard = pmod(col("subj").cast("long"), lit(5)) === 4
       val base = t.where(!isShard)
       TripleStore.propertyTableIncrement(
@@ -481,9 +408,7 @@ object SparkEntry {
     // operator, scored on a deterministically-degraded predictor (10%
     // hash-dropped FNs + the negative sampler's guaranteed FPs)
     "kg_eval_pr" -> ((s, dir) => {
-      val gold = Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))
+      val gold = triples(s, dir)
       val keepH = conv(substring(md5(
         concat_ws("|", col("subj"), col("pred"), col("obj"))), 1, 15), 16, 10)
         .cast("long")
@@ -496,16 +421,11 @@ object SparkEntry {
     }),
     // -- link prediction: resource-allocation scores for the missing edges
     "kg_link_prediction" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.linkPredictionRA(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.linkPredictionRA(triples(s, dir))),
     // -- chain BGP through the ontology: each posting's skills WITH their
     // direct categories (?s requiresSkill ?o1 . ?o1 is_a ?o2)
     "kg_chain_query" -> ((s, dir) => {
-      import graft.kg.query.{Ontology, TripleStore}
-      val t = Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))
+      val t = triples(s, dir)
       val ont = Ontology.taxonomyDf(s).select(col("child").as("subj"),
         lit("is_a").as("pred"), col("parent").as("obj"))
       TripleStore.chainQuery(t.union(ont), "requiresSkill", "is_a")

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.kg.canon.ConnectedComponents
@@ -137,20 +136,7 @@ object Pipeline {
     */
   def skillTriplesSalted(spans: DataFrame, skillsGaz: DataFrame,
       salts: Option[Int] = None): DataFrame = {
-    val li = spans.where(col("kind") === "li")
-    // tokens projected before the gram lambdas (the Extractors.ngramMentions
-    // hoist: no split() inside an interpreted lambda body)
-    val tokens = col("ts")
-    val grams: Seq[org.apache.spark.sql.Column] = (1 to 2).map { n =>
-      when(size(tokens) >= n,
-        transform(sequence(lit(1), size(tokens) - (n - 1)), k =>
-          array_join(slice(tokens, k, lit(n)), " ")))
-        .otherwise(typedLit(Seq.empty[String]))
-    }
-    val gramRows = li
-      .select(col("doc_id"), col("offset"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), col("offset"),
-        explode(flatten(array(grams: _*))).as("gram"))
+    val gramRows = Extractors.gramRows(spans.where(col("kind") === "li"), maxN = 2)
     val s = salts.getOrElse {
       val parts = spans.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
       saltMemo.getOrElseUpdate(
@@ -237,48 +223,28 @@ object Pipeline {
       .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), col("payload").as("obj"),
         lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
 
-    val fusedDim = gaz.mentionDims.map { case (kind, g, pred) =>
-      g.select(lit(kind).as("gkind"), col("surface"), col("entity_id"), lit(pred).as("pred"))
-    }.reduce(_ unionByName _)
     val mentions = cands.where(col("ctype") === "gram")
-      .join(broadcast(fusedDim),
+      .join(broadcast(Extractors.fusedDim(gaz.mentionDims)),
         col("payload") === col("surface") && col("kind") === col("gkind"))
       .select(col("doc_id"), col("pred"), col("entity_id").as("obj"),
         lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
 
-    val titles = {
-      val tc = cands.where(col("ctype") === "title")
-        .select(col("doc_id"), col("payload").as("candidate"), col("offset"))
-      val linked = Linking.linkCandidates(tc, gaz.titles)
-      linked.groupBy(col("doc_id"))
-        .agg(min_by(
-          struct(col("entity_id"), col("score"), col("offset")),
-          struct((-col("score")).as("ns"), col("entity_id"), col("offset"))).as("best"))
-        .select(col("doc_id"), lit(Pred.hasTitle).as("pred"), col("best.entity_id").as("obj"),
-          col("best.score").as("score"), col("best.offset").cast("int").as("src_offset"))
-    }
-
-    val companies = {
-      val cc = cands.where(col("ctype") === "company")
-        .groupBy(col("doc_id"), col("payload").as("candidate"))
-        .agg(count(lit(1)).as("freq"), min(col("offset")).as("src_offset"))
-      cc.groupBy(col("doc_id"))
-        .agg(min_by(struct(col("candidate"), col("freq"), col("src_offset")),
-          struct((-col("freq")).as("nf"), col("candidate"))).as("best"))
-        .select(col("doc_id"), col("best.candidate").as("candidate"),
-          col("best.freq").as("freq"), col("best.src_offset").as("src_offset"))
-        .join(broadcast(gaz.companies), col("candidate") === col("surface"))
-        .select(col("doc_id"), lit(Pred.postedBy).as("pred"), col("entity_id").as("obj"),
-          col("freq").cast("double").as("score"), col("src_offset").cast("int").as("src_offset"))
-    }
+    def routed(ctype: String): DataFrame = cands.where(col("ctype") === ctype)
+      .select(col("doc_id"), col("payload").as("candidate"), col("offset"))
+    val titles = bestTitle(Linking.linkCandidates(routed("title"), gaz.titles))
+    val companies = Extractors.linkBestCompany(routed("company"), gaz.companies)
 
     Seq(workload, mentions, titles, companies).reduce(_.unionByName(_))
       .select(col("doc_id").as("subj"), col("pred"), col("obj"), col("score"),
         col("src_offset").cast("int").as("src_offset"))
   }
 
-  /** Pre-single-pass reference wiring (kept for A/B comparison in tests:
-    * must produce identical triples to [[allTriples]]).
+  /** Multi-pass reference wiring: the per-predicate extractors each read the
+    * spans, with no candidate relation. Tests compare it with [[allTriples]]
+    * to cross-check the single-pass WIRING — the ctype routing of the
+    * candidate relation, its pin, and the fused (kind, surface) mention
+    * join. Both paths call the same rule bodies, so this does not check the
+    * rules; the DuckDB oracles and GoldenFixturesSpec check them.
     */
   def allTriplesMultiPass(postings: DataFrame, gaz: Gazetteers): DataFrame = {
     // spans are a cheap posexplode of the postings scan (derivation is
@@ -299,10 +265,7 @@ object Pipeline {
       fused,
       workloadTriples(spans),
       companyTriples(spans, gaz.companies))
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("doc_id"), col("pred"), col("obj"))
-      .agg(max(col("score")).as("score"), min(col("src_offset")).cast("int").as("src_offset"))
-      .select(col("doc_id").as("subj"), col("pred"), col("obj"), col("score"), col("src_offset"))
+    dedupTriples(parts.reduce(_.unionByName(_)).withColumnRenamed("doc_id", "subj"))
   }
 
   /** R13 — canonicalization: cluster gazetteer surfaces with the fuzzy-linked

@@ -1,7 +1,7 @@
 package graft.kg.emit
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, LinkOption, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -58,7 +58,7 @@ object TableIO {
   def committed(root: String): Seq[(String, Int)] = {
     val dir = manifestDir(root)
     if (!Files.isDirectory(dir)) return Seq.empty
-    Files.list(dir).iterator().asScala
+    listed(dir)
       .map(_.getFileName.toString)
       .filter(_.endsWith(".json"))
       .map { n =>
@@ -66,7 +66,12 @@ object TableIO {
         val i = stem.lastIndexOf('_')
         (stem.substring(0, i), stem.substring(i + 1).toInt)
       }
-      .toSeq
+  }
+
+  /** The entries of `dir`, with the directory stream closed. */
+  private def listed(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toList finally s.close()
   }
 
   /** Drop triples belonging to already-committed partitions (resume filter). */
@@ -90,15 +95,14 @@ object TableIO {
   private def dataPartitions(root: String): Seq[(String, Int)] = {
     val rootPath = Paths.get(root)
     if (!Files.isDirectory(rootPath)) return Seq.empty
-    Files.list(rootPath).iterator().asScala
+    listed(rootPath)
       .filter(_.getFileName.toString.startsWith("pred="))
       .flatMap { predDir =>
         val pred = predDir.getFileName.toString.stripPrefix("pred=")
-        Files.list(predDir).iterator().asScala
+        listed(predDir)
           .filter(_.getFileName.toString.startsWith("bucket="))
           .map(b => (pred, b.getFileName.toString.stripPrefix("bucket=").toInt))
-          .toSeq
-      }.toSeq
+      }
   }
 
   private def dropUncommitted(root: String): Unit = {
@@ -108,12 +112,14 @@ object TableIO {
     }
   }
 
-  /** Recursive delete (bench cleanup). */
+  /** Recursive delete; a missing `root` is a no-op. Symbolic links are
+    * removed, never followed: a link to a directory outside the tree keeps
+    * that directory's contents.
+    */
   def deleteTree(root: String): Unit = deleteRecursively(Paths.get(root))
 
   private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) listed(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 
@@ -166,7 +172,6 @@ object TableIO {
       .mode("append")
       .partitionBy("pred", "bucket")
       .parquet(root)
-    val tWrite = System.nanoTime()
     // lineage/metrics per freshly written partition (read back what we wrote:
     // the manifest must describe the bytes on disk, not the plan). The stats
     // scan is restricted to THIS run's fresh (pred, bucket) dirs via a
@@ -181,9 +186,6 @@ object TableIO {
       .map(r => ((r.getString(0), r.getInt(1)), (r.getLong(2), r.getLong(3))))
       .toMap
     val wallSec = (System.nanoTime() - t0) / 1e9
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(f"[tableio] compute+write ${(tWrite - t0) / 1e9}%.1f s, " +
-        f"stats ${(System.nanoTime() - tWrite) / 1e9}%.1f s")
     val manifests = fresh.map { case (pred, bucket) =>
       val (rows, checksum) = stats((pred, bucket))
       PartitionManifest(pred, bucket, rows, checksum, wallSec, inputLineage)

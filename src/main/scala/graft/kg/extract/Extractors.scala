@@ -40,25 +40,58 @@ object Extractors {
   private val SingleRe = "(\\d{1,3})\\s*%"
   private val KeywordRe = "Pensum|Teilzeit|Vollzeit|Arbeitspensum|Workload"
 
-  /** R5: (doc_id, pred=hasWorkload, obj="lo-hi", score, src_offset). */
-  def workload(spans: DataFrame): DataFrame = {
+  /** R5 keyword gate. The cheap contains() runs before the regex: every
+    * workload form has a '%', and a substring scan is far cheaper than a
+    * regex over the full corpus.
+    */
+  private def workloadGate: Column =
+    col("text").contains("%") && col("text").rlike(KeywordRe)
+
+  /** R5 literal "lo-hi" of a span's text (range, else single), or null. */
+  private def workloadLiteral: Column = {
     val lo = regexp_extract(col("text"), RangeRe, 1)
     val hi = regexp_extract(col("text"), RangeRe, 2)
     val single = regexp_extract(col("text"), SingleRe, 1)
-    val obj = when(lo =!= "",
+    when(lo =!= "",
       format_string("%d-%d",
         least(lo.cast("int"), hi.cast("int")), greatest(lo.cast("int"), hi.cast("int"))))
       .when(single =!= "", format_string("%d-%d", single.cast("int"), single.cast("int")))
       .otherwise(lit(null))
+  }
+
+  /** R5: (doc_id, pred=hasWorkload, obj="lo-hi", score, src_offset). */
+  def workload(spans: DataFrame): DataFrame =
     spans
-      // cheap contains() pre-filter before the regex: every workload form
-      // has a '%', and substring scan is far cheaper than regex over the
-      // full corpus
-      .where(col("text").contains("%") && col("text").rlike(KeywordRe))
-      .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), obj.as("obj"),
+      .where(workloadGate)
+      .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), workloadLiteral.as("obj"),
         lit(1.0).as("score"), col("offset").as("src_offset"))
       .where(col("obj").isNotNull)
-  }
+
+  /** The `n`-token grams of the projected token-array column `ts`, each
+    * joined with single spaces; empty when `ts` has fewer than `n` tokens.
+    * The size guard matters because `sequence(1, size-n+1)` DESCENDS when
+    * size < n (Spark defaults to step -1 when start > stop) and the slice at
+    * index 0 then throws INVALID_PARAMETER_VALUE.START.
+    *
+    * `ts` must be a column projected BEFORE this expression: higher-order
+    * functions evaluate interpreted with no loop-invariant hoisting, so a
+    * split() inside the lambda body re-splits the text once per gram
+    * position — O(tokens²) per row. The lambda is an SQL string with a named
+    * variable because Column-API lambdas mis-bind when nested.
+    */
+  private[graft] def tokenGrams(ts: String, n: Int): Column =
+    when(size(col(ts)) >= n, expr(
+      s"transform(sequence(1, size($ts) - ${n - 1}), i -> array_join(slice($ts, i, $n), ' '))"))
+      .otherwise(expr("cast(array() as array<string>)"))
+
+  /** (doc_id, offset, gram): every 1..maxN-token gram of each span, tokens
+    * split on single spaces — the fact side of the R4 mention join.
+    */
+  private[kg] def gramRows(spans: DataFrame, maxN: Int): DataFrame =
+    spans
+      .select(col("doc_id"), col("offset"), split(col("text"), " ").as("ts"))
+      .select(col("doc_id"), col("offset"),
+        explode(flatten(array((1 to maxN).map(tokenGrams("ts", _)): _*))).as("gram"))
 
   /** R4 — gazetteer mention detection, n-gram broadcast-join plan: tokenize
     * each span on single spaces, generate 1..maxN-token grams, broadcast
@@ -66,24 +99,10 @@ object Extractors {
     * interchangeable trie plan is [[graft.kg.expr.AhoCorasickMatches]].
     * Output: (doc_id, surface, entity_id, canonical, offset).
     */
-  def ngramMentions(spans: DataFrame, gaz: DataFrame, maxN: Int = 2): DataFrame = {
-    // tokens are PROJECTED before the gram lambdas (separate select): HOF
-    // lambdas evaluate interpreted with no loop-invariant hoisting, so a
-    // split() inside the lambda body re-splits the span once per gram
-    // position — O(tokens²) per row. One split per row, identical grams.
-    val tokens = col("ts")
-    val grams: Seq[Column] = (1 to maxN).map { n =>
-      when(size(tokens) >= n,
-        transform(sequence(lit(1), size(tokens) - (n - 1)), k =>
-          array_join(slice(tokens, k, lit(n)), " ")))
-        .otherwise(typedLit(Seq.empty[String]))
-    }
-    spans
-      .select(col("doc_id"), col("offset"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), col("offset"), explode(flatten(array(grams: _*))).as("gram"))
+  def ngramMentions(spans: DataFrame, gaz: DataFrame, maxN: Int = 2): DataFrame =
+    gramRows(spans, maxN)
       .join(broadcast(gaz), col("gram") === col("surface"))
       .select(col("doc_id"), col("surface"), col("entity_id"), col("canonical"), col("offset"))
-  }
 
   /** Single-pass candidate generation (the scan-once hot path of
     * Pipeline.allTriples): one projection over the exploded spans emits every
@@ -108,41 +127,14 @@ object Extractors {
     def cand(ctype: String, payload: Column): Column =
       struct(lit(ctype).as("ctype"), payload.as("payload"))
 
-    val title = when(col("kind") === "h1",
-      array(cand("title", trim(regexp_replace(col("text"), GenderSuffixRe, "")))))
+    val title = when(col("kind") === "h1", array(cand("title", titleSurface)))
       .otherwise(emptyCands)
-
-    val lo = regexp_extract(col("text"), RangeRe, 1)
-    val hi = regexp_extract(col("text"), RangeRe, 2)
-    val single = regexp_extract(col("text"), SingleRe, 1)
-    val wlObj = when(lo =!= "",
-      format_string("%d-%d",
-        least(lo.cast("int"), hi.cast("int")), greatest(lo.cast("int"), hi.cast("int"))))
-      .when(single =!= "", format_string("%d-%d", single.cast("int"), single.cast("int")))
-      .otherwise(lit(null))
-    val workload = when(
-      col("text").contains("%") && col("text").rlike(KeywordRe) && wlObj.isNotNull,
-      array(cand("workload", wlObj))).otherwise(emptyCands)
-
-    val company = when(
-      col("kind") === "footer" && col("text").rlike("\\b(AG|GmbH|SA)$"),
-      array(cand("company", trim(col("text"))))).otherwise(emptyCands)
-
-    // tokens projected before the gram lambdas (the [[ngramMentions]]
-    // hoist): a split() inside the interpreted 2-gram lambda would re-split
-    // the span once per gram position — O(tokens²) per row on the single
-    // corpus-scan hot path of Pipeline.allTriples
-    val tokens = col("ts")
-    val oneGrams = transform(filter(tokens, t => GazetteerIO.upperStart(t)),
-      t => cand("gram", t))
-    val twoGrams = when(col("kind").isin(twoGramKinds.map(x => x: Any): _*) && size(tokens) >= 2,
-      transform(
-        filter(transform(sequence(lit(1), size(tokens) - 1), k =>
-          array_join(slice(tokens, k, lit(2)), " ")), g => GazetteerIO.upperStart(g)),
-        g => cand("gram", g)))
+    val workload = when(workloadGate && workloadLiteral.isNotNull,
+      array(cand("workload", workloadLiteral))).otherwise(emptyCands)
+    val company = when(companyFooter, array(cand("company", trim(col("text")))))
       .otherwise(emptyCands)
     val grams = when(col("kind").isin(mentionKinds.map(x => x: Any): _*),
-      concat(oneGrams, twoGrams)).otherwise(emptyCands)
+      transform(upperGrams(twoGramKinds), g => cand("gram", g))).otherwise(emptyCands)
 
     spans
       .select(col("doc_id"), col("kind"), col("offset"), col("text"),
@@ -155,8 +147,38 @@ object Extractors {
 
   private val GenderSuffixRe = "\\s*\\((?:m/w(?:/d)?|w/m)\\)|\\s*/-in\\b"
 
+  /** R3 title surface: the span text with the gender-form suffixes stripped. */
+  private def titleSurface: Column = trim(regexp_replace(col("text"), GenderSuffixRe, ""))
+
+  /** R8 candidate span: a footer ending in a legal-form suffix. */
+  private def companyFooter: Column =
+    col("kind") === "footer" && col("text").rlike("\\b(AG|GmbH|SA)$")
+
   private def emptyCands: Column =
     expr("cast(array() as array<struct<ctype:string,payload:string>>)")
+
+  /** The uppercase-first 1- and 2-grams of the projected `ts` tokens that
+    * the fused gazetteer join probes; 2-grams only for `twoGramKinds`.
+    * Every gazetteer surface starts with an uppercase letter or a digit
+    * (prep-pass contract, GazetteerIO.validated), while body filler is
+    * lowercase — filtering by first char before the gram explode drops ~95%
+    * of gram rows without changing results.
+    */
+  private def upperGrams(twoGramKinds: Seq[String]): Column =
+    concat(
+      filter(col("ts"), t => GazetteerIO.upperStart(t)),
+      when(col("kind").isin(twoGramKinds.map(x => x: Any): _*),
+        filter(tokenGrams("ts", 2), g => GazetteerIO.upperStart(g)))
+        .otherwise(typedLit(Seq.empty[String])))
+
+  /** (gkind, surface, entity_id, pred): the per-kind mention gazetteers of
+    * `gazByKind` (kind, gazetteer, pred) as ONE dimension keyed by (kind,
+    * surface).
+    */
+  private[kg] def fusedDim(gazByKind: Seq[(String, DataFrame, String)]): DataFrame =
+    gazByKind.map { case (kind, gaz, pred) =>
+      gaz.select(lit(kind).as("gkind"), col("surface"), col("entity_id"), lit(pred).as("pred"))
+    }.reduce(_ unionByName _)
 
   /** Fused mention detection for several gazetteers in ONE pass: the
     * per-kind gazetteers (skills→li, languages→p, locations→footer) are
@@ -166,59 +188,44 @@ object Extractors {
     * is a ~3x cut of the hot path. 2-grams are generated only for kinds whose
     * gazetteer contains multi-token surfaces (`multiTokenKinds` — a prep-pass
     * fact from GazetteerIO.hasMultiTokenSurface; validation that every
-    * surface starts with [A-Z0-9], the contract behind the uppercase-first
-    * token pre-filter below, also lives in the prep pass:
+    * surface starts with [A-Z0-9], the contract behind [[upperGrams]]'
+    * uppercase-first pre-filter, also lives in the prep pass:
     * GazetteerIO.validated — never inside plan construction, where it would
     * fire a driver-blocking action on every build).
     * `gazByKind`: (kind, gazetteer, pred). Output: (doc_id, pred, entity_id, offset).
     */
   def fusedMentions(spans: DataFrame, gazByKind: Seq[(String, DataFrame, String)],
-      multiTokenKinds: Seq[String]): DataFrame = {
-    val dim = gazByKind.map { case (kind, gaz, pred) =>
-      gaz.select(lit(kind).as("gkind"), col("surface"), col("entity_id"),
-        lit(pred).as("pred"))
-    }.reduce(_ unionByName _)
-    // Every gazetteer surface starts with an uppercase letter or a digit
-    // (prep-pass contract, GazetteerIO.validated), while body filler is
-    // lowercase — filtering tokens by first char before the gram explode
-    // drops ~95% of gram rows (and the memory traffic that dominates this
-    // stage) without changing results.
-    // tokens projected before the gram lambdas (the [[ngramMentions]]
-    // hoist: no split() inside an interpreted lambda body)
-    val tokens = col("ts")
-    val oneGrams = filter(tokens, t => GazetteerIO.upperStart(t))
-    val twoGrams = when(col("kind").isin(multiTokenKinds.map(x => x: Any): _*) &&
-        size(tokens) >= 2,
-      filter(transform(sequence(lit(1), size(tokens) - 1), k =>
-        array_join(slice(tokens, k, lit(2)), " ")), g => GazetteerIO.upperStart(g)))
-      .otherwise(typedLit(Seq.empty[String]))
+      multiTokenKinds: Seq[String]): DataFrame =
     spans
       .where(col("kind").isin(gazByKind.map(_._1: Any): _*))
       .select(col("doc_id"), col("kind"), col("offset"),
         split(col("text"), " ").as("ts"))
       .select(col("doc_id"), col("kind"), col("offset"),
-        explode(concat(oneGrams, twoGrams)).as("gram"))
-      .join(broadcast(dim),
+        explode(upperGrams(multiTokenKinds)).as("gram"))
+      .join(broadcast(fusedDim(gazByKind)),
         col("gram") === col("surface") && col("kind") === col("gkind"))
       .select(col("doc_id"), col("pred"), col("entity_id"), col("offset"))
-  }
 
   /** R8 — organisation extraction: footer spans ending in a legal-form suffix
     * (AG/GmbH/SA) are candidates; candidates are frequency-scored per doc and
     * the winner linked (exact, broadcast) to the canonical company table.
     * Output: (doc_id, pred=postedBy, obj=entity_id, score, src_offset).
     */
-  def company(spans: DataFrame, companies: DataFrame): DataFrame = {
-    val cands = spans
-      .where(col("kind") === "footer" && col("text").rlike("\\b(AG|GmbH|SA)$"))
-      .select(col("doc_id"), trim(col("text")).as("candidate"), col("offset"))
-    val scored = cands
+  def company(spans: DataFrame, companies: DataFrame): DataFrame =
+    linkBestCompany(
+      spans.where(companyFooter)
+        .select(col("doc_id"), trim(col("text")).as("candidate"), col("offset")),
+      companies)
+
+  /** R8 scoring and link of (doc_id, candidate, offset) company candidates:
+    * per-doc frequency, then argmax by (freq desc, candidate asc) as a single
+    * hash-agg via min_by on (-freq, candidate) — a ranking window would cost
+    * a second shuffle + sort for a top-1 — then the exact broadcast link.
+    */
+  private[kg] def linkBestCompany(cands: DataFrame, companies: DataFrame): DataFrame =
+    cands
       .groupBy(col("doc_id"), col("candidate"))
       .agg(count(lit(1)).as("freq"), min(col("offset")).as("src_offset"))
-    // argmax by (freq desc, candidate asc) as a single hash-agg via min_by on
-    // (-freq, candidate) — avoids a second shuffle + sort that a ranking
-    // window would cost (R11 top-1 doesn't need full ranking)
-    scored
       .groupBy(col("doc_id"))
       .agg(min_by(struct(col("candidate"), col("freq"), col("src_offset")),
         struct((-col("freq")).as("nf"), col("candidate"))).as("best"))
@@ -227,7 +234,6 @@ object Extractors {
       .join(broadcast(companies), col("candidate") === col("surface"))
       .select(col("doc_id"), lit(Pred.postedBy).as("pred"), col("entity_id").as("obj"),
         col("freq").cast("double").as("score"), col("src_offset").cast("int").as("src_offset"))
-  }
 
   /** R7 — heading-proximity mention detection: restrict gazetteer mentions to
     * spans whose document offset lies within `k` of an *anchor* span (in the
@@ -261,9 +267,7 @@ object Extractors {
   def titleCandidates(spans: DataFrame): DataFrame =
     spans
       .where(col("kind") === "h1")
-      .select(col("doc_id"),
-        trim(regexp_replace(col("text"), GenderSuffixRe, "")).as("candidate"),
-        col("offset"))
+      .select(col("doc_id"), titleSurface.as("candidate"), col("offset"))
 
   /** R3 with the reference's tag-weight + position features (SURVEY.md §2.1
     * R3 [PK-med]): candidates from h1/h2/title spans, feature weight =
@@ -276,9 +280,7 @@ object Extractors {
   def titleCandidatesScored(spans: DataFrame): DataFrame =
     spans
       .where(col("kind").isin("h1", "h2", "title"))
-      .select(col("doc_id"),
-        trim(regexp_replace(col("text"), GenderSuffixRe, "")).as("candidate"),
-        col("offset"),
+      .select(col("doc_id"), titleSurface.as("candidate"), col("offset"),
         (when(col("kind") === "h1", 1.0)
           .when(col("kind") === "title", 0.8)
           .otherwise(0.6) / (lit(1.0) + col("offset"))).as("w"))

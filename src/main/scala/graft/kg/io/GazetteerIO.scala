@@ -76,10 +76,11 @@ object GazetteerIO {
   /** Harness helper: the in-code skills dictionary written once per JVM as a
     * TSV resource file, so a registered query exercises the full
     * file-load → validate → broadcast-join path against the same oracle as
-    * the in-code gazetteer.
+    * the in-code gazetteer. Rewritten if the file is gone (long-lived JVMs
+    * outlive tmp cleaners).
     */
-  def materializedSkillsTsv(): String =
-    written.getOrElseUpdate("skills", {
+  def materializedSkillsTsv(): String = {
+    def build(): String = {
       val dir = Files.createTempDirectory("graft-gazetteers")
       val f = dir.resolve("skills.tsv")
       val lines = Dictionaries.gazSkills
@@ -87,5 +88,9 @@ object GazetteerIO {
         .mkString("", "\n", "\n")
       Files.write(f, lines.getBytes(StandardCharsets.UTF_8))
       f.toString
-    })
+    }
+    val cached = written.getOrElseUpdate("skills", build())
+    if (Files.exists(java.nio.file.Paths.get(cached))) cached
+    else { val fresh = build(); written.put("skills", fresh); fresh }
+  }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.kg.expr.SignBands.signBands
 import graft.kg.expr.SignBandsAlgo
 import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
+import graft.kg.extract.Extractors
 import graft.kg.graph.GraphOps
 
 /** Deduplication operators for a large-scale training-data pipeline: exact
@@ -186,9 +187,7 @@ object Dedup {
     if (checkpoint) GraphOps.pin(df) else df
 
   /** Distinct n-gram token shingles: (doc_id, s). Docs shorter than n tokens
-    * emit none — the size guard matters because `sequence(1, size-n+1)`
-    * DESCENDS when size < n (Spark defaults to step -1 when start > stop) and
-    * the slice at index 0 then throws INVALID_PARAMETER_VALUE.START.
+    * emit none ([[graft.kg.extract.Extractors.tokenGrams]]).
     *
     * Partitioned BY doc_id before the distinct: HashPartitioning(doc_id)
     * satisfies the clustered distributions of the distinct (keys doc_id, s),
@@ -198,19 +197,9 @@ object Dedup {
     * old persist-and-clearCache contract).
     */
   def shingles(corpus: DataFrame, n: Int = 3): DataFrame = {
-    // `ts` is PROJECTED first so the lambda slices a bound column: higher-
-    // order functions evaluate interpreted with no loop-invariant hoisting,
-    // so a `split(text, ' ')` INSIDE the lambda body re-splits the document
-    // once per shingle position — O(tokens²) work per row (guide §1.2 step
-    // 2 / §4: fix the per-task expression work). One split per row, same
-    // shingle strings.
-    val grams = when(size(col("ts")) >= n, expr(
-      s"transform(sequence(1, size(ts) - ${n - 1}), " +
-        s"i -> array_join(slice(ts, i, $n), ' '))"))
-      .otherwise(expr("cast(array() as array<string>)"))
     val np = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     corpus.select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), explode(grams).as("s"))
+      .select(col("doc_id"), explode(Extractors.tokenGrams("ts", n)).as("s"))
       // explicit np: same rationale as exactCollapse — AQE would coalesce
       // the small-input exchange to one partition and serialize the
       // signature/verify consumers hanging off this ONE shared exchange
@@ -738,8 +727,8 @@ object Dedup {
     * how many duplicated windows merged into it.
     */
   def duplicatePassages(corpus: DataFrame, w: Int = 8): DataFrame = {
-    // `ts` projected first (same rationale as [[shingles]]): the interpreted
-    // lambda otherwise re-splits the document once per window position
+    // `ts` projected first (same rationale as Extractors.tokenGrams): the
+    // interpreted lambda otherwise re-splits the document once per window
     val winHashes = when(size(col("ts")) >= w, expr(
       s"""transform(sequence(1, size(ts) - ${w - 1}),
          |  i -> cast(conv(substring(md5(array_join(slice(ts, i, $w), ' ')),

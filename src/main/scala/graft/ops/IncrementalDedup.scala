@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.kg.emit.TableIO.deleteTree
 import graft.kg.graph.GraphOps.pin
 
 /** Incremental deduplication: given a COMMITTED deduped corpus and a newly
@@ -344,22 +345,16 @@ object IncrementalDedup {
     Files.move(tmp, Paths.get(stateDir, "_GENERATION"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally s.close()
-      }
-    folded.foreach(rmTree)
+    folded.foreach(p => deleteTree(p.toString))
     // crash-after-swap garbage from EARLIER compactions: increment dirs
     // whose tags were already retired are dead weight every reader skips —
     // sweep them here (the re-run-compact cleanup the docstring promises)
     visibleIncrements(stateDir, Set.empty)
       .filter(p => prevFolded.contains(p.getFileName.toString))
-      .foreach(rmTree)
-    if (oldBase != stateDir) rmTree(Paths.get(oldBase))
+      .foreach(p => deleteTree(p.toString))
+    if (oldBase != stateDir) deleteTree(oldBase)
     else Seq("reps", "members", "buckets", "pairs", "comps")
-      .foreach(sub => rmTree(Paths.get(stateDir, sub)))
+      .foreach(sub => deleteTree(s"$stateDir/$sub"))
   }
 
   /** Fold a shard INTO the committed state: after this, the state covers

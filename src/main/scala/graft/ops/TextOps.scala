@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kg.extract.Extractors
+
 /** Text-analysis operators for a large-scale training-data pipeline, over the
   * `documents` table. All pure built-ins (codegen'd); outputs are strings /
   * bigints (scaled by 1e4 where fractional) so the DuckDB oracles compare
@@ -164,9 +166,7 @@ object TextOps {
     val st = base.select(col("doc_id"), size(col("ts")).cast("long").as("nt"),
       size(array_distinct(col("ts"))).cast("long").as("nd"))
     val bigrams = base.select(col("doc_id"),
-      explode(when(size(col("ts")) >= 2, expr(
-        "transform(sequence(1, size(ts) - 1), i -> array_join(slice(ts, i, 2), ' '))"))
-        .otherwise(expr("cast(array() as array<string>)"))).as("b"))
+      explode(Extractors.tokenGrams("ts", 2)).as("b"))
     val top = bigrams.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id")).agg(max(col("c")).as("top_n"))
     st.join(top, Seq("doc_id"), "left")
@@ -248,9 +248,7 @@ object TextOps {
       expr("aggregate(transform(ts, t -> cast(length(t) as bigint)), " +
         "cast(0 as bigint), (acc, x) -> acc + x)").as("sumlen"))
     val top = base.select(col("doc_id"),
-      explode(when(size(col("ts")) >= 2, expr(
-        "transform(sequence(1, size(ts) - 1), i -> array_join(slice(ts, i, 2), ' '))"))
-        .otherwise(expr("cast(array() as array<string>)"))).as("b"))
+      explode(Extractors.tokenGrams("ts", 2)).as("b"))
       .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id")).agg(max(col("c")).as("top_n"))
     val mwlE4 = floor(lit(10000.0) * col("sumlen") / col("nt")).cast("long")
@@ -309,9 +307,7 @@ object TextOps {
     */
   def bpePairs(docs: DataFrame, k: Int = 30): DataFrame =
     docs.select(split(col("text"), " ").as("ts"))
-      .select(explode(when(size(col("ts")) >= 2, expr(
-        "transform(sequence(1, size(ts) - 1), i -> array_join(slice(ts, i, 2), ' '))"))
-        .otherwise(expr("cast(array() as array<string>)"))).as("pair"))
+      .select(explode(Extractors.tokenGrams("ts", 2)).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("pair").asc)
       .limit(k)

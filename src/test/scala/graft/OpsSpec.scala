@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kg.extract.Extractors
 import graft.ops.{Dedup, Similarity}
 
 /** Correctness of the non-SQL-expressible training-data ops (rows-only in the
@@ -44,6 +45,23 @@ class OpsSpec extends SparkTestBase {
     val shorties = Seq((1L, ""), (2L, "one"), (3L, "two words"),
       (4L, "three token doc"), (5L, "three token doc")).toDF("doc_id", "text")
     assert(Dedup.shingles(shorties).count() == 2) // only the two 3-token docs
+    // the one n-gram builder behind shingles: on 0/1/2/5-token texts it
+    // equals the Column-API form it replaced and Scala's sliding window —
+    // never a gram of fewer than n tokens
+    val toks = Seq("", "one", "two words", "a b c d e").toDF("text")
+      .select(col("text"), split(col("text"), " ").as("ts"))
+    (1 to 3).foreach { n =>
+      val old = when(size(col("ts")) >= n,
+        transform(sequence(lit(1), size(col("ts")) - (n - 1)), k =>
+          array_join(slice(col("ts"), k, lit(n)), " ")))
+        .otherwise(typedLit(Seq.empty[String]))
+      toks.select(col("text"), Extractors.tokenGrams("ts", n), old).collect().foreach { r =>
+        val ts = r.getString(0).split(" ", -1).toSeq
+        val want = if (ts.size < n) Seq.empty else ts.sliding(n).map(_.mkString(" ")).toSeq
+        assert(r.getSeq[String](1) == want, s"n=$n text='${r.getString(0)}'")
+        assert(r.getSeq[String](2) == want, s"n=$n text='${r.getString(0)}'")
+      }
+    }
     assert(pairs(Dedup.ngramJaccard(shorties, 1, 2)) == Set((4L, 5L)))
     // a binding DF cap only shrinks the result (shared shingles of planted
     // copies all have df >= 2, so maxDf = 1 erases every pair's overlap)

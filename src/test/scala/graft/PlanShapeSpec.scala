@@ -178,4 +178,19 @@ class PlanShapeSpec extends SparkTestBase {
     assert(scan.contains("doc_id") && scan.contains("text"))
     assert(!scan.contains("lang"), s"unused columns not pruned: $scan")
   }
+
+  test("plan dumps: two builds of one plan differ raw but normalize equal") {
+    import org.apache.spark.sql.functions._
+    def dump(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
+      spark.range(4).write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir).union(spark.range(4).toDF().localCheckpoint())
+        .select(transform(array(col("id")), x => x + 1).as("t"))
+      try df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      finally graft.kg.emit.TableIO.deleteTree(dir)
+    }
+    val (a, b) = (dump(), dump())
+    assert(a != b)
+    assert(BenchExtra.normalizedPlan(a) == BenchExtra.normalizedPlan(b))
+  }
 }

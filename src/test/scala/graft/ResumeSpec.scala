@@ -107,6 +107,18 @@ class ResumeSpec extends SparkTestBase {
     assert(full(a) == full(b))
   }
 
+  test("deleteTree removes a symlink in the tree, never the directory it points to") {
+    val outside = tmpDir("outside")
+    val keep = Files.writeString(Paths.get(outside, "keep.txt"), "kept")
+    val tree = tmpDir("tree")
+    Files.createDirectories(Paths.get(tree, "sub"))
+    Files.createSymbolicLink(Paths.get(tree, "sub", "link"), Paths.get(outside))
+    TableIO.deleteTree(tree)
+    assert(!Files.exists(Paths.get(tree)))
+    assert(Files.exists(keep))
+    TableIO.deleteTree(outside)
+  }
+
   test("manifests carry lineage and row counts that match the data") {
     val root = tmpDir("manifest")
     val t = triples()

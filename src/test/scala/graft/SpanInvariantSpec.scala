@@ -1,8 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
-import graft.kg.emit.SpanInvariant
+import graft.kg.emit.{SpanInvariant, TableIO}
 import graft.kg.io.SyntheticCorpus
 import graft.kg.schema.{PostingDoc, Span}
 
@@ -61,6 +63,21 @@ class SpanInvariantSpec extends SparkTestBase {
           | or exists(spans, sp -> (sp.kind = 'media' and (sp.text != '' or sp.media_ref = ''))
           |                     or (sp.kind != 'media' and sp.media_ref != ''))""".stripMargin))
     assert(bad.count() == 0)
+  }
+
+  test("materialized postings: a table deleted under its cache is rebuilt") {
+    val sf = Files.createTempDirectory("graft-sf")
+    Files.copy(Paths.get("/root/testdata/sf0.001/documents.parquet"),
+      sf.resolve("documents.parquet"))
+    def table(): (Long, String) = {
+      val p = SyntheticCorpus.materializedPostings(spark, sf.toString)
+      (p.count(), Paths.get(new java.net.URI(p.inputFiles.head)).getParent.toString)
+    }
+    val (n, dir) = table()
+    TableIO.deleteTree(dir)
+    val (n2, dir2) = table()
+    assert(n2 == n && n > 0)
+    Seq(dir2, sf.toString).foreach(TableIO.deleteTree)
   }
 
   test("pipeline run leaves the postings table unchanged") {
